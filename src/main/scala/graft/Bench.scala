@@ -1,44 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // fail fast on a non-numeric setting: the raw string is interpolated
-    // unquoted into the artifact JSON ("cpus":N), so a local[*]-style
-    // value would silently emit invalid JSON (the parsed:null failure
-    // mode) instead of erroring here
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // nanos-timestamp parquet (events) read as raw long at every entry
-      // point, not as a loader side effect — see Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-scratch checkpoints bypass the fork-prone Hadoop local FS
-      // metadata-write path (no libhadoop in this sandbox) -- see
-      // NioCheckpointFileManager
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.NioCheckpointFileManager")
-      // batch-write commits: direct task commit (algorithm 2) and no
-      // _SUCCESS markers -- per-batch output dirs are re-read by path,
-      // markers are filtered as debris everywhere (see Maintenance)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      // compiled-plan (Janino) cache, default 100 entries: one app
-      // running 166 distinct queries holds far more generated classes
-      // than that, so every timed pass was RE-COMPILING virtually every
-      // plan — pure driver fixed cost billed to each query (~10-50 ms
-      // per generated class), and exactly what a long-lived production
-      // driver running a query mix pays at any data scale. Static conf,
-      // so it must land here at session build; sized to hold the whole
-      // query suite's codegen with room (class metadata is the only
-      // cost). Results are unaffected — this caches compilation, never
-      // data. (guide §1.2 step 2: per-task/driver work, not algorithm)
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.build(cpus)
     // Two untimed warmup passes, then the timed pass — measuring
     // steady-state throughput, not first-touch costs:
     //  1. smallest sibling SF: catches per-query failures cheaply and

@@ -24,11 +24,12 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * The checkpoint contract is unchanged: same files, same atomic
   * write-to-temp-then-rename protocol (reusing Spark's own
   * RenameBasedFSDataOutputStream), same crash semantics on a POSIX
-  * rename. Registered per session via
-  * spark.sql.streaming.checkpointFileManagerClass; it is only ever
-  * pointed at local scratch checkpoints (see EventStreams.scratchDir —
-  * a real deployment with checkpoints on HDFS/S3 keeps the default
-  * manager, which this class does not replace globally).
+  * rename. Registered for every session by [[GraftSession]] via
+  * spark.sql.streaming.checkpointFileManagerClass, so it sees every
+  * checkpoint, durable ones included. It serves local paths only: a
+  * root or path with any scheme other than `file` (hdfs://, s3a://, …)
+  * fails fast instead of being written to a local path of the same name
+  * — such a deployment sets the conf back to Spark's stock manager.
   *
   * Instantiated reflectively by CheckpointFileManager.create with
   * (Path, Configuration) — both parameters required by that contract.
@@ -36,8 +37,17 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
 class NioCheckpointFileManager(root: Path, hadoopConf: Configuration)
     extends CheckpointFileManager {
 
+  toNio(root) // a non-local root fails at construction
+
   private def toNio(p: Path): JPath = {
     val uri = p.toUri
+    val scheme = uri.getScheme
+    if (scheme != null && scheme != "file")
+      throw new IllegalArgumentException(
+        s"graft.NioCheckpointFileManager writes local files only; $p has " +
+          s"scheme '$scheme' and would be written to a local path of the " +
+          "same name — set spark.sql.streaming.checkpointFileManagerClass " +
+          "to Spark's stock manager for non-local checkpoints")
     val raw = uri.getPath
     java.nio.file.Paths.get(if (raw == null || raw.isEmpty) p.toString else raw)
   }

@@ -28,25 +28,10 @@ object SnapshotRunner {
     val Array(battlesPath, leaderboardPath, metaPath, outDir) = args.take(4)
     val topN = if (args.length > 4) args(4).toInt else 1000
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      // nanos-timestamp parquet read as raw long at every entry point,
-      // not as a loader side effect — see Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-scratch checkpoints bypass the fork-prone Hadoop local FS
-      // metadata-write path (no libhadoop in this sandbox) -- see
-      // NioCheckpointFileManager
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "graft.NioCheckpointFileManager")
-      // batch-write commits: direct task commit (algorithm 2) and no
-      // _SUCCESS markers -- per-batch output dirs are re-read by path,
-      // markers are filtered as debris everywhere (see Maintenance)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_MASTER points the job at a cluster; locally it runs on
+    // GraftSession's local[cpus]
+    val spark = GraftSession.build(GraftSession.cpus,
+      sys.env.get("SPARK_MASTER").map("spark.master" -> _).toSeq: _*)
 
     val battles = Tables.readBattlesJson(spark, battlesPath)
     val leaderboard = spark.read
@@ -56,8 +41,22 @@ object SnapshotRunner {
     val snap = SnapshotPipeline.build(spark, battles, leaderboard, meta, topN)
     snap.write(outDir)
 
-    // ---- post-load validation (validate_snapshot.py:49-206) ------------
-    val written = snap.all.keys.map(n =>
+    val failures = validate(spark, outDir, snap.all.keys, topN)
+    if (failures.nonEmpty) {
+      failures.foreach(f => System.err.println(s"[validate] FAILED: $f"))
+      spark.stop()
+      sys.exit(1)
+    }
+    println(s"[snapshot] wrote ${snap.all.size} tables to $outDir; all invariants hold")
+    spark.stop()
+  }
+
+  /** The post-load invariants (validate_snapshot.py:49-206) over the
+    * warehouse written at `outDir`: the name of every check that fails,
+    * empty when all hold. `tables` are the table names under `outDir`. */
+  def validate(spark: SparkSession, outDir: String, tables: Iterable[String],
+      topN: Int): List[String] = {
+    val written = tables.map(n =>
       n -> spark.read.parquet(s"$outDir/$n")).toMap
     var failures = List.empty[String]
     def check(name: String)(ok: => Boolean): Unit =
@@ -102,12 +101,6 @@ object SnapshotRunner {
       ratioOf("unknown") <= 0.30
     }
 
-    if (failures.nonEmpty) {
-      failures.foreach(f => System.err.println(s"[validate] FAILED: $f"))
-      spark.stop()
-      sys.exit(1)
-    }
-    println(s"[snapshot] wrote ${snap.all.size} tables to $outDir; all invariants hold")
-    spark.stop()
+    failures
   }
 }

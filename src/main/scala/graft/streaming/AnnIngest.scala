@@ -132,25 +132,16 @@ object AnnIngest {
         "and the file sink silently skips them against its commit log; " +
         "pass the prior session's checkpointDir, or compact the index " +
         "(compactIvfFlatIndex) between sessions")
-    val ckpt = checkpointDir.map(java.nio.file.Paths.get(_))
-      .getOrElse(EventStreams.scratchDir("graft_annin_ckpt_"))
-    val landingSchema =
-      scala.util.Try(spark.read.parquet(landingDir).schema).toOption
-        .orElse(schemaFallback).getOrElse(defaultLandingSchema)
-    val reader = spark.readStream.schema(landingSchema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
-    val src = reader.parquet(landingDir)
-    val q = Similarity.assignCells(
-        transform.map(_(src)).getOrElse(src), centroids)
-      .writeStream
-      .format("parquet")
-      .option("path", s"$concrete/assignments_stream")
-      .option("checkpointLocation", ckpt.toString)
-      .partitionBy("cell")
-      .outputMode("append")
-      .start()
-    try { q.processAllAvailable() } finally q.stop()
-    if (checkpointDir.isEmpty)
-      graft.operators.Maintenance.rmTree(ckpt.toFile)
+    val landingSchema = MicroBatchRunner.landingSchema(spark, landingDir,
+      schemaFallback, defaultLandingSchema)
+    val src = MicroBatchRunner.landing(spark, landingDir, landingSchema,
+      maxFilesPerTrigger)
+    MicroBatchRunner.runSink(
+      Similarity.assignCells(transform.map(_(src)).getOrElse(src), centroids),
+      "graft_annin_ckpt_", checkpointDir, () => ())(
+      _.format("parquet")
+        .option("path", s"$concrete/assignments_stream")
+        .partitionBy("cell")
+        .outputMode("append"))
   }
 }

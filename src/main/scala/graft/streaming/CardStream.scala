@@ -281,46 +281,21 @@ object CardStream {
       targetPath: String, weights: Seq[Long], k: Int = 64,
       maxFilesPerTrigger: Option[Int] = None,
       checkpointDir: Option[String] = None): Unit = {
-    // same silent-data-loss guard as streamingCmsCells: a standing card
-    // + scratch checkpoint means restarted batch ids colliding with the
-    // applied set
-    Upsert.recoverStagedSwap(targetPath)
-    require(checkpointDir.nonEmpty
-        || Upsert.appliedBatches(targetPath).isEmpty,
-      s"standing card at $targetPath already carries applied-batch " +
-        "markers and no durable checkpointDir was supplied — a scratch " +
-        "checkpoint restarts batch ids at 0, which would collide with " +
-        "the applied set and silently skip this session's data; pass " +
-        "the prior session's checkpointDir (or start a fresh targetPath)")
-    val ckpt = checkpointDir.map(java.nio.file.Paths.get(_))
-      .getOrElse(EventStreams.scratchDir("graft_card_ckpt_"))
+    StateFold.requireDurableOverMarkers(targetPath, checkpointDir, "card")
     // group-commit crash guard (durable continuations only) — see
     // StateFold.requireNoLostFolds
     checkpointDir.foreach(c =>
       StateFold.requireNoLostFolds(targetPath, c, "card"))
-    val reader = spark.readStream.schema(landingSchema)
-    maxFilesPerTrigger.foreach(n =>
-      reader.option("maxFilesPerTrigger", n.toString))
     // ONE session fold: standing card + applied set resolved here,
     // carried across batches in memory; scratch checkpoints flush once
     // at session end, durable ones every DefaultFlushEvery batches
     val fold = cardFold(spark, targetPath, weights, k,
-      flushEvery =
-        if (checkpointDir.isEmpty) Int.MaxValue
-        else StateFold.DefaultFlushEvery,
+      flushEvery = StateFold.flushEveryFor(checkpointDir),
       durable = checkpointDir.nonEmpty)
-    val q = reader.parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        fold(batch, batchId)
-        ()
-      }
-      .start()
-    // flush in the finally: a half-run session persists what it folded
-    try { q.processAllAvailable() } finally { q.stop(); fold.flush() }
-    if (checkpointDir.isEmpty)
-      graft.operators.Maintenance.rmTree(ckpt.toFile)
+    MicroBatchRunner.run(
+      MicroBatchRunner.landing(spark, landingDir, landingSchema,
+        maxFilesPerTrigger),
+      "graft_card_ckpt_", checkpointDir, () => fold.flush())(fold)
   }
 
   /** The card read off the standing state — q132's output shape, with

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.operators.Maintenance.rmTree
+
 /** Structured Streaming extension of the snapshot pipeline (SURVEY §2.11):
   * the batch engine's event aggregations re-expressed as an incremental
   * stream — file source → watermark → tumbling window → stateful agg.
@@ -95,9 +97,8 @@ object EventStreams {
         d.toString
       } else path
     val tsType = probeTsType(spark, dir)
-    val reader = spark.readStream.schema(eventSchemaFor(tsType))
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
-    reader.parquet(dir)
+    MicroBatchRunner.landing(spark, dir, eventSchemaFor(tsType),
+        maxFilesPerTrigger)
       .withColumn("ts",
         graft.sources.Tables.guardTs(graft.sources.Tables.eventTsToTimestamp(tsType)))
   }
@@ -333,38 +334,18 @@ object EventStreams {
   def incrementalRollup(spark: SparkSession, path: String, targetPath: String,
       maxFilesPerTrigger: Option[Int] = None,
       checkpointDir: Option[String] = None): Unit = {
-    // same cross-session silent-skip guard as streamingCmsCells /
-    // CardStream (a scratch checkpoint restarts batch ids, which
-    // collide with the standing rollup's applied set and silently drop
-    // the new session's data); recover a mid-swap crash FIRST or the
-    // recoverable table looks missing and the guard passes vacuously
-    graft.operators.Upsert.recoverStagedSwap(targetPath)
-    require(checkpointDir.nonEmpty
-        || graft.operators.Upsert.appliedBatches(targetPath).isEmpty,
-      s"standing rollup at $targetPath already carries applied-batch " +
-        "markers and no durable checkpointDir was supplied — a scratch " +
-        "checkpoint restarts batch ids at 0, which would collide with " +
-        "the applied set and silently skip this session's data; pass " +
-        "the prior session's checkpointDir (or start a fresh targetPath)")
-    val ckpt = checkpointDir.map(java.nio.file.Paths.get(_))
-      .getOrElse(scratchDir("graft_rollup_ckpt_"))
-    val q = readEventStream(spark, path, maxFilesPerTrigger)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val agg = batch.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("events"),
-            sum(floor(col("value") * lit(100.0) + lit(0.5)).cast("long")).as("value_cents"))
-        graft.operators.Upsert.mergeParquet(spark, targetPath, agg,
-          batchId = Some(batchId))(
-          graft.operators.Upsert.additiveMerge(_, _,
-            keys = Seq("event_type"), metrics = Seq("events", "value_cents")))
-        ()
-      }
-      .start()
-    try { q.processAllAvailable() } finally q.stop()
-    if (checkpointDir.isEmpty) rmDir(ckpt.toFile)
-    stagedDirs.remove(path).foreach(rmDir)
+    StateFold.requireDurableOverMarkers(targetPath, checkpointDir, "rollup")
+    MicroBatchRunner.run(readEventStream(spark, path, maxFilesPerTrigger),
+        "graft_rollup_ckpt_", checkpointDir, () => ()) { (batch, batchId) =>
+      val agg = batch.groupBy(col("event_type"))
+        .agg(count(lit(1)).as("events"),
+          sum(floor(col("value") * lit(100.0) + lit(0.5)).cast("long")).as("value_cents"))
+      graft.operators.Upsert.mergeParquet(spark, targetPath, agg,
+        batchId = Some(batchId))(
+        graft.operators.Upsert.additiveMerge(_, _,
+          keys = Seq("event_type"), metrics = Seq("events", "value_cents")))
+    }
+    stagedDirs.remove(path).foreach(rmTree)
   }
 
   /** Streaming Count-Min maintenance — [[incrementalRollup]]'s shape
@@ -394,23 +375,7 @@ object EventStreams {
       item: Column, depth: Int, width: Int,
       maxFilesPerTrigger: Option[Int] = None,
       checkpointDir: Option[String] = None): Unit = {
-    // the cross-session collision above is SILENT data loss (restarted
-    // ids are skipped as replays, no error anywhere) — fail fast instead
-    // of relying on the caller having read the scaladoc: a standing
-    // sketch that already carries applied-batch markers plus a scratch
-    // checkpoint can only be a second session over the same target.
-    // Recover a mid-swap crash FIRST, or the recoverable table looks
-    // missing and the guard silently passes.
-    graft.operators.Upsert.recoverStagedSwap(targetPath)
-    require(checkpointDir.nonEmpty
-        || graft.operators.Upsert.appliedBatches(targetPath).isEmpty,
-      s"standing sketch at $targetPath already carries applied-batch " +
-        "markers and no durable checkpointDir was supplied — a scratch " +
-        "checkpoint restarts batch ids at 0, which would collide with " +
-        "the applied set and silently skip this session's data; pass " +
-        "the prior session's checkpointDir (or start a fresh targetPath)")
-    val ckpt = checkpointDir.map(java.nio.file.Paths.get(_))
-      .getOrElse(scratchDir("graft_cms_ckpt_"))
+    StateFold.requireDurableOverMarkers(targetPath, checkpointDir, "sketch")
     // group-commit crash guard (durable continuations only) — see
     // StateFold.requireNoLostFolds
     checkpointDir.foreach { c =>
@@ -436,9 +401,7 @@ object EventStreams {
     var pending = Set.empty[Long]
     var dirty = false
     val assertLease = StateFold.takeLease(targetPath, "cms")
-    val flushEvery =
-      if (checkpointDir.isEmpty) Int.MaxValue
-      else StateFold.DefaultFlushEvery
+    val flushEvery = StateFold.flushEveryFor(checkpointDir)
     def doFlush(): Unit =
       if (pending.nonEmpty &&
           (dirty || graft.operators.Fs.exists(targetPath))) {
@@ -455,10 +418,9 @@ object EventStreams {
         pending = Set.empty
         dirty = false
       }
-    val q = readEventStream(spark, path, maxFilesPerTrigger)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatchRunner.run(readEventStream(spark, path, maxFilesPerTrigger),
+        "graft_cms_ckpt_", checkpointDir, () => doFlush()) {
+      (batch, batchId) =>
         if (!applied.contains(batchId) && !pending.contains(batchId)) {
           // ONE job: ≤ depth·width cells, the documented bounded collect
           val delta = graft.operators.Sketch.cmsCells(batch, item, depth, width)
@@ -473,16 +435,8 @@ object EventStreams {
           pending += batchId
           if (pending.size >= flushEvery) doFlush()
         }
-        ()
-      }
-      .start()
-    // flush in the finally: a half-run session persists what it folded
-    try { q.processAllAvailable() } finally { q.stop(); doFlush() }
-    // a caller-supplied durable checkpoint is KEPT (it is the
-    // cross-session exactly-once state); only the scratch default is
-    // reclaimed
-    if (checkpointDir.isEmpty) rmDir(ckpt.toFile)
-    stagedDirs.remove(path).foreach(rmDir)
+    }
+    stagedDirs.remove(path).foreach(rmTree)
   }
 
   /** Run a streaming aggregation over a static directory to completion and
@@ -520,19 +474,13 @@ object EventStreams {
       try { q.processAllAvailable() } finally q.stop()
     } finally {
       spark.conf.set(shufflePartitionsKey, prevShuffle)
-      rmDir(ckpt.toFile)
+      rmTree(ckpt.toFile)
     }
     val view = spark.table(name)
     val rows = view.collect().toIndexedSeq
     val schema = view.schema
     spark.catalog.dropTempView(name)
-    stagedDirs.remove(path).foreach { d =>
-      def rm(f: java.io.File): Unit = if (f.exists()) {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      rm(d)
-    }
+    stagedDirs.remove(path).foreach(rmTree)
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, math.max(1, rows.size / 1000 + 1)), schema)
   }
@@ -612,7 +560,7 @@ object EventStreams {
     srcStageCache.get(pathKey) match {
       case Some((id, dir)) if id == identity => dir
       case prev =>
-        prev.foreach { case (_, dir) => rmDir(dir.toFile) }
+        prev.foreach { case (_, dir) => rmTree(dir.toFile) }
         val d = scratchDir("graft_stream_srccache_")
         files.foreach(f =>
           java.nio.file.Files.copy(f.toPath, d.resolve(f.getName)))
@@ -692,7 +640,7 @@ object EventStreams {
           val keep = scratchDir("graft_stream_sentcache_")
             .resolve("sentinel.parquet")
           Files.move(part.toPath, keep)
-          rmDir(tmp.toFile)
+          rmTree(tmp.toFile)
           keep
         })
     def sentMicrosFor(t: Long, n: Int): Long =
@@ -760,8 +708,8 @@ object EventStreams {
       spark.conf.set(shufflePartitionsKey, prevShuffle)
       // landing/checkpoint are private scratch — removed on success AND
       // failure (only `out` survives, as the caller's artifact)
-      rmDir(landing.toFile)
-      rmDir(ckpt.toFile)
+      rmTree(landing.toFile)
+      rmTree(ckpt.toFile)
     }
     // empty-source guard: append mode with no rows (or no closed windows)
     // writes no data files, and reading the bare dir would throw "Unable
@@ -775,10 +723,5 @@ object EventStreams {
     if (raw.columns.contains("event_type"))
       raw.filter(col("event_type") =!= sentinelType)
     else raw
-  }
-
-  private def rmDir(f: java.io.File): Unit = if (f.exists()) {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmDir)
-    f.delete(); ()
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
@@ -98,23 +98,11 @@ object GramianStream {
       maxFilesPerTrigger: Option[Int] = None,
       schemaFallback: Option[StructType] = None,
       checkpointDir: Option[String] = None): Unit = {
-    Upsert.recoverStagedSwap(targetPath)
+    StateFold.requireDurableOverMarkers(targetPath, checkpointDir,
+      "gramian state")
     var expectDim = validateStanding(spark, targetPath, scale)
-    require(checkpointDir.nonEmpty
-        || Upsert.appliedBatches(targetPath).isEmpty,
-      s"standing state at $targetPath already carries applied-batch " +
-        "markers and no durable checkpointDir was supplied — a scratch " +
-        "checkpoint restarts batch ids at 0, which would collide with " +
-        "the applied set and silently skip this session's data; pass " +
-        "the prior session's checkpointDir (or start a fresh targetPath)")
-    val ckpt = checkpointDir.map(java.nio.file.Paths.get(_))
-      .getOrElse(EventStreams.scratchDir("graft_gramian_ckpt_"))
-    val landingSchema =
-      scala.util.Try(spark.read.parquet(landingDir).schema).toOption
-        .orElse(schemaFallback).getOrElse(defaultLandingSchema)
-    val reader = spark.readStream.schema(landingSchema)
-    maxFilesPerTrigger.foreach(n =>
-      reader.option("maxFilesPerTrigger", n.toString))
+    val landingSchema = MicroBatchRunner.landingSchema(spark, landingDir,
+      schemaFallback, defaultLandingSchema)
     // group-commit crash guard (durable continuations only) — see
     // StateFold.requireNoLostFolds
     checkpointDir.foreach { c =>
@@ -141,9 +129,7 @@ object GramianStream {
     var pending = Set.empty[Long]
     var dirty = false
     val assertLease = StateFold.takeLease(targetPath, "gramian")
-    val flushEvery =
-      if (checkpointDir.isEmpty) Int.MaxValue
-      else StateFold.DefaultFlushEvery
+    val flushEvery = StateFold.flushEveryFor(checkpointDir)
     def doFlush(): Unit =
       if (pending.nonEmpty &&
           (dirty || graft.operators.Fs.exists(targetPath))) {
@@ -170,10 +156,11 @@ object GramianStream {
         pending = Set.empty
         dirty = false
       }
-    val q = reader.parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatchRunner.run(
+      MicroBatchRunner.landing(spark, landingDir, landingSchema,
+        maxFilesPerTrigger),
+      "graft_gramian_ckpt_", checkpointDir, () => doFlush()) {
+      (batch, batchId) =>
         if (!applied.contains(batchId) && !pending.contains(batchId)) {
           // ONE job: the batch's cells, ≤ d²+d+1 data rows plus one
           // (-2, d) width marker per non-empty partition — the
@@ -212,12 +199,6 @@ object GramianStream {
           pending += batchId
           if (pending.size >= flushEvery) doFlush()
         }
-        ()
-      }
-      .start()
-    // flush in the finally: a half-run session persists what it folded
-    try { q.processAllAvailable() } finally { q.stop(); doFlush() }
-    if (checkpointDir.isEmpty)
-      graft.operators.Maintenance.rmTree(ckpt.toFile)
+    }
   }
 }

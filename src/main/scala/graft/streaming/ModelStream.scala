@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -92,26 +92,12 @@ object ModelStream {
       maxFilesPerTrigger: Option[Int] = None,
       schemaFallback: Option[StructType] = None,
       checkpointDir: Option[String] = None): Unit = {
-    // a prior session may have died mid-swap — restore the table BEFORE
-    // any pre-merge read, or the recoverable state looks missing and
-    // BOTH fail-fast guards below silently pass
-    Upsert.recoverStagedSwap(targetPath)
+    // restores a mid-swap crash BEFORE any pre-merge read, or the
+    // recoverable state looks missing and both fail-fast guards pass
+    StateFold.requireDurableOverMarkers(targetPath, checkpointDir, "model")
     validateModelBuckets(spark, targetPath, nBuckets)
-    require(checkpointDir.nonEmpty
-        || Upsert.appliedBatches(targetPath).isEmpty,
-      s"standing model at $targetPath already carries applied-batch " +
-        "markers and no durable checkpointDir was supplied — a scratch " +
-        "checkpoint restarts batch ids at 0, which would collide with " +
-        "the applied set and silently skip this session's data; pass " +
-        "the prior session's checkpointDir (or start a fresh targetPath)")
-    val ckpt = checkpointDir.map(java.nio.file.Paths.get(_))
-      .getOrElse(EventStreams.scratchDir("graft_model_ckpt_"))
-    val landingSchema =
-      scala.util.Try(spark.read.parquet(landingDir).schema).toOption
-        .orElse(schemaFallback).getOrElse(defaultLandingSchema)
-    val reader = spark.readStream.schema(landingSchema)
-    maxFilesPerTrigger.foreach(n =>
-      reader.option("maxFilesPerTrigger", n.toString))
+    val landingSchema = MicroBatchRunner.landingSchema(spark, landingDir,
+      schemaFallback, defaultLandingSchema)
     // group-commit crash guard (durable continuations only) — see
     // StateFold.requireNoLostFolds
     checkpointDir.foreach { c =>
@@ -140,9 +126,7 @@ object ModelStream {
     var pending = Set.empty[Long]
     var dirty = false
     val assertLease = StateFold.takeLease(targetPath, "model")
-    val flushEvery =
-      if (checkpointDir.isEmpty) Int.MaxValue
-      else StateFold.DefaultFlushEvery
+    val flushEvery = StateFold.flushEveryFor(checkpointDir)
     def doFlush(): Unit =
       if (pending.nonEmpty && (dirty || graft.operators.Fs.exists(targetPath))) {
         assertLease()
@@ -158,10 +142,11 @@ object ModelStream {
         pending = Set.empty
         dirty = false
       }
-    val q = reader.parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatchRunner.run(
+      MicroBatchRunner.landing(spark, landingDir, landingSchema,
+        maxFilesPerTrigger),
+      "graft_model_ckpt_", checkpointDir, () => doFlush()) {
+      (batch, batchId) =>
         if (!applied.contains(batchId) && !pending.contains(batchId)) {
           val delta = Selection.gramCells(batch, col(textCol), nBuckets)
             .collect() // ≤ 2·nBuckets rows, the documented bounded collect
@@ -175,12 +160,6 @@ object ModelStream {
           pending += batchId
           if (pending.size >= flushEvery) doFlush()
         }
-        ()
-      }
-      .start()
-    // flush in the finally: a half-run session persists what it folded
-    try { q.processAllAvailable() } finally { q.stop(); doFlush() }
-    if (checkpointDir.isEmpty)
-      graft.operators.Maintenance.rmTree(ckpt.toFile)
+    }
   }
 }

@@ -256,57 +256,33 @@ object QuotaStream {
       schemaFallback: Option[StructType] = None,
       checkpointDir: Option[String] = None): DataFrame = {
     require(capPerSource > 0, "capPerSource must be positive")
-    // cross-session guard (ModelStream/GramianStream's contract): against
-    // standing state with applied-batch markers, a SCRATCH checkpoint
-    // restarts batch ids at 0 — a colliding id whose batch now contains
-    // NEW landing files would be skipped by the marker, silently dropping
-    // that data from the quota output
-    Upsert.recoverStagedSwap(statePath)
-    require(checkpointDir.nonEmpty
-        || Upsert.appliedBatches(statePath).isEmpty,
-      s"standing quota state at $statePath already carries applied-batch " +
-        "markers and no durable checkpointDir was supplied — a scratch " +
-        "checkpoint restarts batch ids at 0, which would collide with " +
-        "the applied set and silently skip this session's data; pass " +
-        "the prior session's checkpointDir (or start a fresh statePath)")
-    val ckpt = checkpointDir.map(java.nio.file.Paths.get(_))
-      .getOrElse(EventStreams.scratchDir("graft_quota_ckpt_"))
+    StateFold.requireDurableOverMarkers(statePath, checkpointDir,
+      "quota state")
     // group-commit crash guard (durable continuations only): batches
     // the checkpoint committed but the state never applied died in
     // memory between flushes — fail loudly, the stream will never
     // re-present their landing files
     checkpointDir.foreach(c =>
       StateFold.requireNoLostFolds(statePath, c, "quota"))
-    val landingSchema =
-      scala.util.Try(spark.read.parquet(landingDir).schema).toOption
-        .orElse(schemaFallback).getOrElse(defaultLandingSchema)
-    val reader = spark.readStream.schema(landingSchema)
-    maxFilesPerTrigger.foreach(n =>
-      reader.option("maxFilesPerTrigger", n.toString))
+    val landingSchema = MicroBatchRunner.landingSchema(spark, landingDir,
+      schemaFallback, defaultLandingSchema)
     var lastBatchId = -1L
     // ONE session fold: standing counts + applied set resolved here,
     // carried across batches in memory; scratch-checkpoint runs flush
     // once at session end (a restart replays everything anyway),
     // durable ones bound the crash window at DefaultFlushEvery
     val fold = quotaFold(spark, statePath, outPath, capPerSource,
-      flushEvery =
-        if (checkpointDir.isEmpty) Int.MaxValue
-        else StateFold.DefaultFlushEvery,
+      flushEvery = StateFold.flushEveryFor(checkpointDir),
       durable = checkpointDir.nonEmpty)
-    val q = reader.parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatchRunner.run(
+      MicroBatchRunner.landing(spark, landingDir, landingSchema,
+        maxFilesPerTrigger),
+      "graft_quota_ckpt_", checkpointDir, () => fold.flush()) {
+      (batch, batchId) =>
         lastBatchId = math.max(lastBatchId, batchId)
         fold(batch, batchId)
-        ()
-      }
-      .start()
-    // flush in the finally: a half-run session persists what it folded
-    try { q.processAllAvailable() } finally { q.stop(); fold.flush() }
+    }
     AdmissionStream.pruneStaleBatches(spark, outPath, lastBatchId)
-    if (checkpointDir.isEmpty)
-      graft.operators.Maintenance.rmTree(ckpt.toFile)
     val outP = new org.apache.hadoop.fs.Path(outPath)
     if (outP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(outP))
       spark.read.option("recursiveFileLookup", "true").parquet(outPath)

@@ -65,6 +65,30 @@ object StateFold {
     * end instead (`Int.MaxValue`). */
   val DefaultFlushEvery = 32
 
+  /** Flush cadence for a session: once at session end under a scratch
+    * checkpoint (a restart replays everything anyway), every
+    * [[DefaultFlushEvery]] folded batches under a durable one. */
+  def flushEveryFor(checkpointDir: Option[String]): Int =
+    if (checkpointDir.isEmpty) Int.MaxValue else DefaultFlushEvery
+
+  /** Session-start guard of every stream over a standing state table.
+    * Restores a mid-swap crash first (a recoverable table would otherwise
+    * look missing and the guard pass vacuously), then refuses a SCRATCH
+    * checkpoint against a table that already carries applied-batch
+    * markers: a scratch checkpoint restarts batch ids at 0, the ids
+    * collide with the applied set, and this session's data is skipped
+    * as replays — silent data loss, so it must fail here instead. */
+  def requireDurableOverMarkers(statePath: String,
+      checkpointDir: Option[String], what: String): Unit = {
+    Upsert.recoverStagedSwap(statePath)
+    require(checkpointDir.nonEmpty || Upsert.appliedBatches(statePath).isEmpty,
+      s"standing $what at $statePath already carries applied-batch " +
+        "markers and no durable checkpointDir was supplied — a scratch " +
+        "checkpoint restarts batch ids at 0, which would collide with " +
+        "the applied set and silently skip this session's data; pass " +
+        "the prior session's checkpointDir (or start a fresh state path)")
+  }
+
   /** Batch ids the streaming checkpoint at `ckptDir` has committed
     * (empty when the checkpoint doesn't exist yet). The commit log is
     * one numeric-named file per committed batch under `commits/`. */

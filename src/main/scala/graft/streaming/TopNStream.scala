@@ -168,49 +168,24 @@ object TopNStream {
       schemaFallback: Option[StructType] = None,
       checkpointDir: Option[String] = None): DataFrame = {
     require(n > 0, "n must be positive")
-    // cross-session guard (ModelStream/GramianStream's contract): a
-    // scratch checkpoint against standing applied markers restarts batch
-    // ids at 0 and a colliding id's NEW landing data is silently skipped
-    Upsert.recoverStagedSwap(statePath)
-    require(checkpointDir.nonEmpty
-        || Upsert.appliedBatches(statePath).isEmpty,
-      s"standing top-N state at $statePath already carries applied-batch " +
-        "markers and no durable checkpointDir was supplied — a scratch " +
-        "checkpoint restarts batch ids at 0, which would collide with " +
-        "the applied set and silently skip this session's data; pass " +
-        "the prior session's checkpointDir (or start a fresh statePath)")
-    val ckpt = checkpointDir.map(java.nio.file.Paths.get(_))
-      .getOrElse(EventStreams.scratchDir("graft_topn_ckpt_"))
+    StateFold.requireDurableOverMarkers(statePath, checkpointDir,
+      "top-N state")
     // group-commit crash guard (durable continuations only) — see
     // StateFold.requireNoLostFolds
     checkpointDir.foreach(c =>
       StateFold.requireNoLostFolds(statePath, c, "top-N"))
-    val landingSchema =
-      scala.util.Try(spark.read.parquet(landingDir).schema).toOption
-        .orElse(schemaFallback).getOrElse(defaultLandingSchema)
-    val reader = spark.readStream.schema(landingSchema)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
+    val landingSchema = MicroBatchRunner.landingSchema(spark, landingDir,
+      schemaFallback, defaultLandingSchema)
     // ONE session fold: standing board + applied set resolved here,
     // carried across batches in memory; scratch checkpoints flush once
     // at session end, durable ones every DefaultFlushEvery batches
     val fold = boardFold(spark, statePath, n, scoreCol,
-      flushEvery =
-        if (checkpointDir.isEmpty) Int.MaxValue
-        else StateFold.DefaultFlushEvery,
+      flushEvery = StateFold.flushEveryFor(checkpointDir),
       durable = checkpointDir.nonEmpty)
-    val q = reader.parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        fold(batch, batchId)
-        ()
-      }
-      .start()
-    // flush in the finally: a half-run session persists what it folded
-    try { q.processAllAvailable() } finally { q.stop(); fold.flush() }
-    if (checkpointDir.isEmpty)
-      graft.operators.Maintenance.rmTree(ckpt.toFile)
+    MicroBatchRunner.run(
+      MicroBatchRunner.landing(spark, landingDir, landingSchema,
+        maxFilesPerTrigger),
+      "graft_topn_ckpt_", checkpointDir, () => fold.flush())(fold)
     readBoard(spark, statePath)
   }
 }

@@ -101,6 +101,33 @@ class NioCheckpointFileManagerSpec extends SparkSpecBase {
     }
   }
 
+  test("a non-local scheme fails fast, naming the conf; file: and bare paths round-trip") {
+    val conf = "spark.sql.streaming.checkpointFileManagerClass"
+    val badRoot = the[IllegalArgumentException] thrownBy
+      new NioCheckpointFileManager(new Path("hdfs://nn/ckpt"), new Configuration())
+    badRoot.getMessage should include(conf)
+    withManager { (fm, dir) =>
+      val s3 = new Path("s3a://b/x")
+      (the[IllegalArgumentException] thrownBy fm.exists(s3))
+        .getMessage should include(conf)
+      an[IllegalArgumentException] should be thrownBy
+        fm.createAtomic(s3, overwriteIfPossible = true)
+      an[IllegalArgumentException] should be thrownBy fm.mkdirs(s3)
+      // written through a file: URI, read back through the bare path
+      val o = fm.createAtomic(new Path(s"file://$dir/f"), false)
+      o.write("via-file".getBytes); o.close()
+      val in = fm.open(new Path(s"$dir/f"))
+      in.read() shouldBe 'v'.toInt
+      in.close()
+      // and the other way round
+      val o2 = fm.createAtomic(new Path(s"$dir/b"), false)
+      o2.write("bare".getBytes); o2.close()
+      fm.exists(new Path(s"file://$dir/b")) shouldBe true
+      fm.list(new Path(s"file://$dir")).map(_.getPath.getName).toSet shouldBe
+        Set("f", "b")
+    }
+  }
+
   test("streaming query checkpoints and restarts through the nio manager") {
     import spark.implicits._
     // the spec session registers graft.NioCheckpointFileManager; prove the
@@ -123,14 +150,12 @@ class NioCheckpointFileManagerSpec extends SparkSpecBase {
       addFile(0); addFile(1)
       val schema = spark.read.parquet(landing.toString).schema
       val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
-      def runOnce(): Unit = {
-        val q = spark.readStream.schema(schema).parquet(landing.toString)
-          .writeStream.option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            seen ++= b.select("id").collect().map(_.getLong(0)); ()
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      def runOnce(): Unit =
+        streaming.MicroBatchRunner.run(
+          spark.readStream.schema(schema).parquet(landing.toString),
+          "graft_niocfm_unused_", Some(ckpt.toString), () => ()) { (b, _) =>
+          seen ++= b.select("id").collect().map(_.getLong(0))
+        }
       runOnce()
       seen.sorted.toSeq shouldBe Seq(0L, 1L)
       addFile(2)

@@ -156,6 +156,30 @@ class SnapshotPipelineSpec extends SparkSpecBase {
     plan should include regex "PartitionFilters: \\[.*deck_type.* = Siege"
   }
 
+  test("SnapshotRunner.validate passes the written snapshot and names each broken invariant") {
+    val root = java.nio.file.Files.createTempDirectory("graft_snap_validate_")
+    try {
+      val clean = root.resolve("clean").toString
+      snap.write(clean)
+      SnapshotRunner.validate(spark, clean, snap.all.keys, topN = 2) shouldBe Nil
+      val hash = snap.deckCards.select("deck_hash").head().get(0)
+      val broken = snap.all
+        .updated("deck_cards", snap.deckCards // a 7-card deck
+          .filter(!(col("deck_hash") === lit(hash) && col("slot") === 8)))
+        .updated("player_decks", snap.playerDecks
+          .withColumn("wins", col("uses") + 1))
+        .updated("meta_deck_types", snap.metaDeckTypes // Unknown share 1.0
+          .withColumn("deck_type", lit("Unknown")))
+      val bad = root.resolve("broken").toString
+      broken.foreach { case (n, df) => df.write.parquet(s"$bad/$n") }
+      val failures = SnapshotRunner.validate(spark, bad, broken.keys, topN = 2)
+      failures should contain allOf (
+        "deck_cards: every deck has exactly 8 rows",
+        "0 <= wins <= uses in all stats tables",
+        "unknown-archetype ratio <= 0.30")
+    } finally graft.operators.Maintenance.rmTree(root.toFile)
+  }
+
   test("cards dim covers every observed card id with a non-empty name") {
     val ids = snap.cards.select("card_id").collect().map(_.getLong(0)).toSet
     ids shouldBe (1L to 16L).toSet
