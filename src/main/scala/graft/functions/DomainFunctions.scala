@@ -24,13 +24,6 @@ object DomainFunctions {
     coalesce(nullif(trophies.cast("int"), lit(0)),
       nullif(eloRating.cast("int"), lit(0)), lit(0))
 
-  /** Card variant from evolutionLevel: 1→evo, 2→hero, else normal.
-    * Reference scripts/etl_snapshot_topn.py:50-66. */
-  def cardVariant(evolutionLevel: Column): Column =
-    when(evolutionLevel === 1, "evo")
-      .when(evolutionLevel === 2, "hero")
-      .otherwise("normal")
-
   /** Crown comparison → "win" | "loss" | "draw" (strict >).
     * Reference src/analysist/battle_filters.py:38-49. */
   def battleResult(teamCrowns: Column, oppCrowns: Column): Column = {

@@ -2,11 +2,16 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.expressions.{AsciiEscape, DeckSignature, MatchSidesJson}
 
 /** Deck / match identity hashing, byte-compatible with the reference
-  * (src/clashdb/hash_utils.py). Everything is built from codegen'd
-  * built-ins (`array_sort`, `transform`, `concat_ws`, `sha1`, `to_json`) —
-  * no UDFs — so hashing runs inside whole-stage codegen and scales
+  * (src/clashdb/hash_utils.py). The per-row collection work is done by
+  * two native kernels, [[graft.expressions.DeckSignature]] (sort and
+  * render a deck's pairs) and [[graft.expressions.MatchSidesJson]] (sort
+  * and render one side's participants); the rest is built-ins
+  * (`concat_ws`, `least`/`greatest`, `to_json`, `sha1`). No lambda
+  * higher-order function is involved — Spark evaluates those interpreted,
+  * outside whole-stage codegen — so hashing generates code and scales
   * embarrassingly parallel (pure per-row work, no shuffle).
   */
 object Hashing {
@@ -15,19 +20,11 @@ object Hashing {
     * lexicographically, and render "id:variant|id:variant|…".
     * Reference src/clashdb/hash_utils.py:11-22 — note the Python sorts the
     * STRING form of card_id ("10001" < "26000"), reproduced by casting to
-    * string before array_sort (struct ordering is field-by-field).
+    * string before sorting (pairs compare field by field, in byte order).
     *
-    * @param pairs array<struct<_1: card_id (any), _2: variant string>>
+    * @param pairs array<struct<_1: card_id (bigint or string), _2: variant string>>
     */
-  def canonicalDeckSignature(pairs: Column): Column = {
-    val normalized = transform(pairs, p =>
-      struct(p.getField("_1").cast("string").as("cid"),
-             p.getField("_2").cast("string").as("variant")))
-    array_join(
-      transform(array_sort(normalized),
-        p => concat_ws(":", p.getField("cid"), p.getField("variant"))),
-      "|")
-  }
+  def canonicalDeckSignature(pairs: Column): Column = DeckSignature(pairs, "_1", "_2")
 
   /** sha1 hex of the utf-8 signature — bit-identical to Python
     * `hashlib.sha1(sig.encode()).hexdigest()` (hash_utils.py:25-26). */
@@ -44,9 +41,11 @@ object Hashing {
     * Byte-compat notes:
     *  - Python `json.dumps(sort_keys=True, separators=(",",":"))` renders
     *    keys alphabetically with no whitespace; Spark `to_json` renders
-    *    struct fields in declaration order with no whitespace, so we declare
-    *    fields already alphabetical (battleTime < mode < opponent < team;
-    *    crowns < tag).
+    *    struct fields in declaration order with no whitespace, so the head
+    *    is `to_json` of (battleTime, mode), reopened, and the sides follow
+    *    in key order (opponent < team) as
+    *    [[graft.expressions.MatchSidesJson]] renders them (crowns < tag,
+    *    escaped as `to_json` escapes).
     *  - `mode` = str(gameMode.id or gameMode.name or type or "") — Python
     *    `or` skips 0/""/null, reproduced with nullif+coalesce.
     *  - side payload participants are sorted by upper-cased tag; crowns
@@ -60,26 +59,13 @@ object Hashing {
     *    hashes identically to the Python bytes (HashingSpec vector). */
   def matchHash(battleTime: Column, modeId: Column, modeName: Column,
                 battleType: Column, team: Column, opponent: Column): Column = {
-    def sidePayload(side: Column): Column = {
-      // sort by tag (tag first in the sort struct), then re-shape to the
-      // alphabetical {crowns, tag} field order the JSON needs.
-      val sorted = array_sort(transform(coalesce(side, array()), p =>
-        struct(upper(coalesce(p.getField("tag"), lit(""))).as("tag"),
-               coalesce(p.getField("crowns").cast("int"), lit(0)).as("crowns"))))
-      transform(sorted, p =>
-        struct(p.getField("crowns").as("crowns"), p.getField("tag").as("tag")))
-    }
-    val modeKey = coalesce(
-      nullif(modeId.cast("string"), lit("0")),
-      nullif(coalesce(modeName, lit("")), lit("")),
-      nullif(coalesce(battleType, lit("")), lit("")),
-      lit(""))
-    val payload = struct(
-      coalesce(battleTime, lit("")).as("battleTime"),
-      modeKey.as("mode"),
-      sidePayload(opponent).as("opponent"),
-      sidePayload(team).as("team"))
-    sha1(graft.expressions.AsciiEscape(to_json(payload)))
+    // {"battleTime":…,"mode":…} reopened to append the side arrays
+    val head = to_json(struct(coalesce(battleTime, lit("")).as("battleTime"),
+      modeKey(modeId, modeName, battleType).as("mode")))
+    val payload = concat(head.substr(lit(1), length(head) - 1),
+      lit(",\"opponent\":"), MatchSidesJson(opponent),
+      lit(",\"team\":"), MatchSidesJson(team), lit("}"))
+    sha1(AsciiEscape(payload))
   }
 
   /** Orientation-insensitive match hash — the dedup key the reference
@@ -93,23 +79,20 @@ object Hashing {
     * hashing, so either perspective produces identical bytes. */
   def symmetricMatchHash(battleTime: Column, modeId: Column, modeName: Column,
                          battleType: Column, team: Column, opponent: Column): Column = {
-    def sideJson(side: Column): Column = {
-      val sorted = array_sort(transform(coalesce(side, array()), p =>
-        struct(upper(coalesce(p.getField("tag"), lit(""))).as("tag"),
-               coalesce(p.getField("crowns").cast("int"), lit(0)).as("crowns"))))
-      to_json(transform(sorted, p =>
-        struct(p.getField("crowns").as("crowns"), p.getField("tag").as("tag"))))
-    }
-    val modeKey = coalesce(
+    val a = MatchSidesJson(team)
+    val b = MatchSidesJson(opponent)
+    sha1(AsciiEscape(concat_ws("|", coalesce(battleTime, lit("")),
+      modeKey(modeId, modeName, battleType), least(a, b), greatest(a, b))))
+  }
+
+  /** str(gameMode.id or gameMode.name or type or "") — Python `or` skips
+    * 0/""/null. */
+  private def modeKey(modeId: Column, modeName: Column, battleType: Column): Column =
+    coalesce(
       nullif(modeId.cast("string"), lit("0")),
       nullif(coalesce(modeName, lit("")), lit("")),
       nullif(coalesce(battleType, lit("")), lit("")),
       lit(""))
-    val a = sideJson(team)
-    val b = sideJson(opponent)
-    sha1(graft.expressions.AsciiEscape(concat_ws("|",
-      coalesce(battleTime, lit("")), modeKey, least(a, b), greatest(a, b))))
-  }
 
   /** Content hash for generic exact dedup (md5 hex — cheap, codegen'd,
     * and reproducible in any SQL engine for oracle checks). */

@@ -10,13 +10,18 @@ import graft.sources.CardMetadata
   * warehouse DDL db/schema.sql).
   *
   * Execution shape (designed for 100 TB of battle logs):
-  *  1. narrow stage: filter ranked-1v1, compute match_hash, extract both
-  *     decks, hash + classify — all codegen'd per-row work fused into the
-  *     scan;
+  *  1. narrow stage: filter ranked-1v1 and compute match_hash (the native
+  *     [[graft.expressions.MatchSidesJson]] kernel per side) inside the
+  *     scan's generated code;
   *  2. `dropDuplicates(match_hash)` — the ONE global shuffle keyed on a
   *     sha1 hex (uniform, unskewable key: hash partitioning is perfectly
   *     balanced);
-  *  3. union-of-perspectives (U1) doubles rows *after* dedup, still narrow;
+  *  3. after dedup, one projection extracts, hashes and classifies both
+  *     decks with the native deck kernels ([[graft.expressions.DeckObs]],
+  *     [[graft.expressions.DeckSignature]],
+  *     [[graft.expressions.ClassifyDeck]]) and `inline` emits both
+  *     perspectives (U1) from that one row — narrow, each deck's work done
+  *     once;
   *  4. each rollup is a partial-aggregate-friendly count/sum groupBy —
   *     map-side combine collapses the per-partition cardinality to
   *     |distinct keys| (archetypes: ~6; decks: bounded by distinct hashes)
@@ -40,7 +45,8 @@ object SnapshotPipeline {
       metaTypeDeckIds: DataFrame,// meta_type_deck_ids(deck_type, deck_hash, uses, wins)
       metaTypeCards: DataFrame,  // meta_type_cards(deck_type, card_id, card_variant, uses, wins)
       playerTypeCards: DataFrame,// player_type_cards(player_tag, deck_type, card_id, card_variant, uses, wins)
-      metaTypeMatchups: DataFrame// meta_type_matchups(deck_type, opp_deck_type, uses, wins)
+      metaTypeMatchups: DataFrame,// meta_type_matchups(deck_type, opp_deck_type, uses, wins)
+      cached: Seq[DataFrame]     // frames the refresh persisted; see release()
   ) {
     def all: Map[String, DataFrame] = Map(
       "player" -> players, "cards" -> cards, "decks" -> decks,
@@ -58,7 +64,9 @@ object SnapshotPipeline {
       * `partitionFacts` lays the per-type rollups out partitioned by
       * deck_type — the storage-level replacement for the reference's
       * secondary indexes (db/schema.sql:159-180): dashboard queries
-      * filtered to one archetype then prune to that partition's files. */
+      * filtered to one archetype then prune to that partition's files.
+      *
+      * The persisted frames are released after the last table. */
     def write(outDir: String, partitionFacts: Boolean = false): Unit = {
       val partitioned = Set("meta_type_deck_ids", "meta_type_cards", "meta_type_matchups")
       all.foreach { case (name, df) =>
@@ -66,13 +74,21 @@ object SnapshotPipeline {
         if (partitionFacts && partitioned(name)) w.partitionBy("deck_type").parquet(s"$outDir/$name")
         else w.parquet(s"$outDir/$name")
       }
+      release()
     }
+
+    /** Unpersist (non-blocking) the frames the refresh cached, so a
+      * long-lived session does not keep one pair per refresh. The tables
+      * stay usable and recompute if read again. Every writer of the
+      * snapshot calls this after its last table. */
+    def release(): Unit = cached.foreach(_.unpersist(blocking = false))
   }
 
   /** Per-side observation frame: one row per (deduped match, side).
     * Columns: match_hash, player_tag, deck_hash, deck_type, cards(obs
     * array), won, opp_deck_type. This is U1 — the load-bearing
-    * union-of-perspectives (etl_snapshot_topn.py:304-308). */
+    * union-of-perspectives (etl_snapshot_topn.py:304-308), emitted as two
+    * rows of one projection rather than a union of two. */
   def sideObservations(battles: DataFrame, meta: CardMetadata.Meta,
       overrides: Map[String, String]): DataFrame = {
     val overrideMap =
@@ -148,18 +164,19 @@ object SnapshotPipeline {
       .withColumn("opp_won", F.isWin(col("o.crowns"), col("t.crowns")))
   }
 
-  /** U1 — both perspectives of the typed wide frame. */
+  /** U1 — both perspectives of the typed wide frame, as two rows generated
+    * from each wide row: a union of two projections would recompute every
+    * deck kernel of the wide frame in each branch. */
   private def finishSides(wide: DataFrame): DataFrame = {
     def side(tag: String, dh: String, tp: String, obs: String, won: String,
-        oppTp: String): DataFrame =
-      wide.select(col("match_hash"), col(tag).as("player_tag"),
-        col(dh).as("deck_hash"), col(tp).as("deck_type"),
-        col(obs).as("cards"), col(won).as("won"),
+        oppTp: String) =
+      struct(col(tag).as("player_tag"), col(dh).as("deck_hash"),
+        col(tp).as("deck_type"), col(obs).as("cards"), col(won).as("won"),
         col(oppTp).as("opp_deck_type"))
 
-    side("team_tag", "team_dh", "team_type", "team_obs", "team_won", "opp_type")
-      .unionByName(
-        side("opp_tag", "opp_dh", "opp_type", "opp_obs", "opp_won", "team_type"))
+    wide.select(col("match_hash"), inline(array(
+      side("team_tag", "team_dh", "team_type", "team_obs", "team_won", "opp_type"),
+      side("opp_tag", "opp_dh", "opp_type", "opp_obs", "opp_won", "team_type"))))
   }
 
   /** Build the full snapshot. `battles` in [[graft.sources.Tables.battleSchema]];
@@ -260,6 +277,6 @@ object SnapshotPipeline {
 
     Snapshot(players, cards, decks.select("deck_hash", "deck_type"), deckCards,
       playerDecks, deckTypes, metaDeckTypes, metaTypeDeckIds, metaTypeCards,
-      playerTypeCards, metaTypeMatchups)
+      playerTypeCards, metaTypeMatchups, cached = Seq(sides, decks))
   }
 }

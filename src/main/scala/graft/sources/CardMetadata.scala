@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
+import graft.expressions.CardIndex
 
 /** Card-metadata dimension: `{id, name, maxLevel, elixir, is_big_tank,
   * is_bait_piece, is_bridge_spam_piece}` records (shape per reference
@@ -10,10 +11,11 @@ import org.apache.spark.sql.types._
   *
   * The dimension is tiny (~121 rows) so the engine consumes it two ways:
   *  - as a broadcast DataFrame for equi-joins (SURVEY J2/J3);
-  *  - as driver-side literal maps baked into codegen'd column expressions
-  *    (the classifier cascade) — zero joins, zero shuffles, and the lookup
-  *    is a constant-folded literal on every executor. At 1000 executors
-  *    this is strictly cheaper than even a broadcast join.
+  *  - as a driver-side [[graft.expressions.CardIndex]] that the native deck
+  *    kernels reference from generated code (name backfill, the classifier
+  *    cascade) — zero joins, zero shuffles, one hash probe per card on
+  *    every executor. At 1000 executors this is strictly cheaper than even
+  *    a broadcast join.
   */
 object CardMetadata {
   val schema: StructType = StructType(Seq(
@@ -55,7 +57,7 @@ object CardMetadata {
     }
   }
 
-  /** Lookup maps for literal-expression use. */
+  /** Lookup maps, and the kernels' index over them. */
   final case class Meta(cards: Seq[Card]) {
     val nameById: Map[Long, String]    = cards.map(c => c.id -> c.name).toMap
     val elixirByName: Map[String, Int] =
@@ -63,6 +65,9 @@ object CardMetadata {
     val baitNames: Set[String]   = cards.filter(_.isBaitPiece).map(_.name).toSet
     val bridgeNames: Set[String] = cards.filter(_.isBridgeSpamPiece).map(_.name).toSet
     val tankNames: Set[String]   = cards.filter(_.isBigTank).map(_.name).toSet
+    /** The maps above as the deck kernels read them. */
+    lazy val index: CardIndex =
+      CardIndex(nameById, elixirByName, baitNames, bridgeNames, tankNames)
   }
 
   def load(spark: SparkSession, path: String): Meta =

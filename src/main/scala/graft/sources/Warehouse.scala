@@ -87,7 +87,8 @@ object Warehouse {
     * as `write.jdbc`. Tables are created by Spark on first load (engine
     * dialect picks the column types); subsequent loads append into the
     * just-cleared tables, so DDL (and any constraints/indexes added by the
-    * DBA from db/schema.sql) survives. */
+    * DBA from db/schema.sql) survives. The snapshot's cached frames are
+    * released after the last table. */
   def writeSnapshot(snapshot: Snapshot, url: String,
       props: Properties = new Properties, batchSize: Int = 1000,
       maxConnections: Int = 8): Unit = {
@@ -99,6 +100,7 @@ object Warehouse {
         .option("batchsize", batchSize.toString)
         .jdbc(url, name, props)
     }
+    snapshot.release()
   }
 
   /** S9 — DB→DB publish: copy the snapshot from a local warehouse to a

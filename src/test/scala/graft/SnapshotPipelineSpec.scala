@@ -180,6 +180,26 @@ class SnapshotPipelineSpec extends SparkSpecBase {
     } finally graft.operators.Maintenance.rmTree(root.toFile)
   }
 
+  test("write releases every frame the refresh cached") {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val cacheManager = session.sharedState.cacheManager
+    val fresh = SnapshotPipeline.build(spark, battles, leaderboard, meta, topN = 2)
+    // sub-plans of the tables that the cache manager would serve
+    def served: Seq[String] = fresh.all.toSeq.flatMap { case (name, df) =>
+      df.queryExecution.analyzed.collect {
+        case p if cacheManager.lookupCachedData(session, p).isDefined => name
+      }
+    }
+    served should not be empty // the refresh persists its sides and decks
+    val out = java.nio.file.Files.createTempDirectory("graft_snap_cache_")
+    try {
+      fresh.write(out.toString)
+      served shouldBe empty
+      // the tables still compute after their frames were released
+      fresh.metaDeckTypes.agg(sum("uses")).head().getLong(0) shouldBe 4L
+    } finally graft.operators.Maintenance.rmTree(out.toFile)
+  }
+
   test("cards dim covers every observed card id with a non-empty name") {
     val ids = snap.cards.select("card_id").collect().map(_.getLong(0)).toSet
     ids shouldBe (1L to 16L).toSet

@@ -37,7 +37,8 @@ class WarehouseSpec extends SparkSpecBase {
     playerTypeCards = Seq(("#A", "Siege", 1L, "", 2L, 1L))
       .toDF("player_tag", "deck_type", "card_id", "card_variant", "uses", "wins"),
     metaTypeMatchups = Seq(("Siege", "Hybrid", 2L, 1L), ("Hybrid", "Siege", 2L, 1L))
-      .toDF("deck_type", "opp_deck_type", "uses", "wins"))
+      .toDF("deck_type", "opp_deck_type", "uses", "wins"),
+    cached = Nil)
 
   private def readBack(dbUrl: String, table: String): DataFrame =
     spark.read.jdbc(dbUrl, table, props)
@@ -66,6 +67,14 @@ class WarehouseSpec extends SparkSpecBase {
     // second load: cleared-then-appended, NOT doubled
     Warehouse.writeSnapshot(snap, db, props)
     for ((name, df) <- snap.all) assertEqual(readBack(db, name), df)
+  }
+
+  test("writeSnapshot releases the snapshot's cached frames") {
+    val base = snapshot
+    val pinned = base.decks.cache()
+    pinned.storageLevel should not be org.apache.spark.storage.StorageLevel.NONE
+    Warehouse.writeSnapshot(base.copy(cached = Seq(pinned)), url("wh_release"), props)
+    pinned.storageLevel shouldBe org.apache.spark.storage.StorageLevel.NONE
   }
 
   test("reload preserves the deck_type_overrides config table") {
